@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Scale-adaptive scan widening (optimization guide §2: derive
   * partitioning from the input, never a constant tuned for one scale).
@@ -29,21 +29,40 @@ object Par {
     * executors freed by the current job's tail). For the multi-output
     * commit paths here (history + watermark tables, data + sidecar) the
     * writes touch DISJOINT directories, so overlap changes no on-disk
-    * state transition order a reader can observe within one output. The
-    * first failure propagates; all tasks are joined before return.
+    * state transition order a reader can observe within one output.
+    *
+    * Every task runs under one job group per call. The first failure
+    * cancels that group's running and future jobs, so a sibling write still
+    * in flight fails instead of committing; all tasks are joined, then the
+    * first failure is thrown with every later one attached as suppressed.
     */
   def jobs(tasks: (() => Unit)*): Unit = {
     if (tasks.sizeIs <= 1) { tasks.foreach(_.apply()); return }
-    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext)
+    val group = s"Par.jobs-${java.util.UUID.randomUUID()}"
+    val first = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val later = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val threads = tasks.map { t =>
-      val th = new Thread(() =>
-        try t() catch { case e: Throwable => err.compareAndSet(null, e) })
+      val th = new Thread(() => {
+        sc.foreach(_.setJobGroup(group, "Par.jobs", interruptOnCancel = true))
+        try t() catch {
+          case e: Throwable =>
+            if (first.compareAndSet(null, e))
+              sc.foreach(_.cancelJobGroupAndFutureJobs(group,
+                s"a sibling Par.jobs task failed: $e"))
+            else later.add(e)
+        }
+      })
       th.setDaemon(true)
       th.start()
       th
     }
     threads.foreach(_.join())
-    val e = err.get()
-    if (e != null) throw e
+    val e = first.get()
+    if (e != null) {
+      later.forEach(e.addSuppressed(_))
+      throw e
+    }
   }
 }

@@ -19,6 +19,14 @@ import org.apache.spark.sql.types._
   */
 object Fasta {
 
+  /** The `sequences` table as ingest emits it and a target DB persists it
+    * under `sequences/`; readers of a DB declare it instead of inferring it.
+    */
+  val Schema: StructType = StructType(Seq(
+    StructField("seqId", LongType), StructField("header", StringType),
+    StructField("name", StringType), StructField("seq", StringType),
+    StructField("seqLen", IntegerType)))
+
   def read(spark: SparkSession, path: String): DataFrame = {
     val raw = spark.read.option("lineSep", "\n>").text(path)
     fromRecords(spark, raw)

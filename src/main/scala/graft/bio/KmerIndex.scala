@@ -2,6 +2,7 @@ package graft.bio
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Target k-mer index build — the `createkmertable` stage
   * (`src/sra/createkmertable.cpp:43-245`).
@@ -22,6 +23,13 @@ import org.apache.spark.sql.functions._
 object KmerIndex {
 
   val DefaultK = 9 // LocalParameters.h:148
+
+  /** The persisted index (`buildWithPos`, then [[write]]) under a target
+    * DB's `kmers/`; readers of a DB declare it instead of inferring it.
+    */
+  val Schema: StructType = StructType(Seq(
+    StructField("kmer", LongType), StructField("seqId", LongType),
+    StructField("seqLen", IntegerType), StructField("tpos", IntegerType)))
 
   /** sequences(seqId, seq, seqLen, ...) -> kmers(kmer, seqId, seqLen). */
   def build(sequences: DataFrame, k: Int = DefaultK,

@@ -277,7 +277,7 @@ object PetaSearch {
       params: Params = Params()): Unit = {
     val seqs = Fasta.read(spark, targetFasta)
     seqs.write.mode("overwrite").parquet(s"$dbPath/sequences")
-    val persisted = spark.read.parquet(s"$dbPath/sequences")
+    val persisted = spark.read.schema(Fasta.Schema).parquet(s"$dbPath/sequences")
     KmerIndex.write(
       KmerIndex.buildWithPos(persisted, params.k, params.mode.kmerAlphabet),
       s"$dbPath/kmers")
@@ -301,34 +301,27 @@ object PetaSearch {
     */
   def appendToTargetDb(spark: SparkSession, targetFasta: String,
       dbPath: String, params: Params = Params()): Unit = {
-    val existing = spark.read.parquet(s"$dbPath/sequences")
+    val existing = spark.read.schema(Fasta.Schema).parquet(s"$dbPath/sequences")
     // coalesce: an empty existing table yields a null max (getLong would NPE)
     val offset = existing
       .agg(coalesce(max(col("seqId")), lit(-1L))).head().getLong(0) + 1
     // old-corpus totals for the metadata update are snapshotted BEFORE the
     // new batch lands — the fallback below scans `existing`'s path, and a
     // post-append scan would double-count the batch
-    val metaPath = new org.apache.hadoop.fs.Path(s"$dbPath/meta")
-    val hasMeta = metaPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration).exists(metaPath)
-    val (oldRes, oldN) =
-      if (hasMeta) {
-        val r = spark.read.parquet(s"$dbPath/meta").head()
-        (r.getAs[Long]("dbResCount"), r.getAs[Long]("nSeqs"))
-      } else {
-        // pre-metadata DB: one-time column-pruned scan of the old corpus
-        val r = existing.agg(coalesce(sum(col("seqLen")), lit(0L)),
-          count(lit(1))).head()
-        (r.getLong(0), r.getLong(1))
-      }
+    val (oldRes, oldN) = readMeta(spark, dbPath).getOrElse {
+      // pre-metadata DB: one-time column-pruned scan of the old corpus
+      val r = existing.agg(coalesce(sum(col("seqLen")), lit(0L)),
+        count(lit(1))).head()
+      (r.getLong(0), r.getLong(1))
+    }
     val newSeqs = Fasta.read(spark, targetFasta)
       .withColumn("seqId", col("seqId") + lit(offset))
     newSeqs.write.mode("append").parquet(s"$dbPath/sequences")
-    val appended = spark.read.parquet(s"$dbPath/sequences")
+    val appended = spark.read.schema(Fasta.Schema).parquet(s"$dbPath/sequences")
       .filter(col("seqId") >= offset)
     val newIdx = KmerIndex.buildWithPos(appended, params.k,
       params.mode.kmerAlphabet)
-    val merged = spark.read.parquet(s"$dbPath/kmers")
+    val merged = spark.read.schema(KmerIndex.Schema).parquet(s"$dbPath/kmers")
       .unionByName(newIdx)
       .groupBy(col("kmer"))
       .agg(max_by(
@@ -372,28 +365,35 @@ object PetaSearch {
   }
 
   /** Query a persisted target DB (the reference's `petasearch` against
-    * prebuilt k-mer tables): scans only the stored index — no target-side
-    * k-mer extraction at query time.
+    * prebuilt k-mer tables): scans the stored index once per query batch,
+    * and expands the query table once — no target-side k-mer extraction at
+    * query time.
     */
   def searchIndexed(spark: SparkSession, queries: DataFrame, dbPath: String,
       params: Params = Params()): DataFrame = {
-    val targets = spark.read.parquet(s"$dbPath/sequences")
-    val index = spark.read.parquet(s"$dbPath/kmers")
-    // one-row metadata read instead of a full-corpus seqLen aggregate;
-    // DBs built before metadata existed fall back to the scan
-    val metaPath = new org.apache.hadoop.fs.Path(s"$dbPath/meta")
-    val hasMeta = metaPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration).exists(metaPath)
-    val dbResCount: Option[Long] =
-      if (hasMeta)
-        Some(spark.read.parquet(s"$dbPath/meta").head().getAs[Long]("dbResCount"))
-      else None
+    // declared schemas and a driver-side meta read: opening the DB launches
+    // no Spark job; DBs built before metadata existed fall back to Align's
+    // residue scan
+    val targets = spark.read.schema(Fasta.Schema).parquet(s"$dbPath/sequences")
+    val index = spark.read.schema(KmerIndex.Schema).parquet(s"$dbPath/kmers")
     val qk = buildQueryTable(spark, queries, params)
     val pf = Prefilter.runWithDiag(qk, index, params.requiredKmerMatches)
     Align.run(spark, pf, queries, targets, params.evalThr, params.xdrop,
       params.mode.gaps, params.mode.alignMatrix, params.mode.gumbel, params.k,
-      knownDbResCount = dbResCount)
+      knownDbResCount = readMeta(spark, dbPath).map(_._1))
   }
+
+  /** A DB's `meta/` row, (dbResCount, nSeqs), read on the driver from the
+    * parquet file itself — no Spark job. The residue total of an empty DB
+    * is null and reads as 0; None when the DB has no metadata.
+    */
+  private def readMeta(spark: SparkSession, dbPath: String): Option[(Long, Long)] =
+    graft.sources.ManifestIO.readFirstRecord(
+      spark.sparkContext.hadoopConfiguration, s"$dbPath/meta").map { g =>
+      def long(f: String) =
+        if (g.getFieldRepetitionCount(f) == 0) 0L else g.getLong(f, 0)
+      (long("dbResCount"), long("nSeqs"))
+    }
 
   /** Single-job multi-DB search over a `dbId`-partitioned corpus
     * (SURVEY §1.3/§3.2: "a targetlist becomes a partition column"): ONE
@@ -420,15 +420,10 @@ object PetaSearch {
     val qk = QueryTable.build(spark, queries, params.query.copy(
       k = params.k, seedMatrix = params.mode.seedMatrix,
       kmerAlphabetSize = params.mode.kmerAlphabet.length))
-    val hits = qk.join(index, Seq("kmer"))
+    val pf = Prefilter.countGate(qk.join(index, Seq("kmer"))
       .select(col("dbId"), col("targetId"), col("queryId"), col("kmerPos"),
-        col("kmer"), (col("kmerPos") - col("tpos")).cast("int").as("diag"))
-    val goodPairs = hits
-      .groupBy(col("dbId"), col("targetId"), col("queryId"))
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") > params.requiredKmerMatches)
-      .select(col("dbId"), col("targetId"), col("queryId"))
-    val pf = hits.join(goodPairs, Seq("dbId", "targetId", "queryId"), "left_semi")
+        col("kmer"), (col("kmerPos") - col("tpos")).cast("int").as("diag")),
+      Seq("dbId", "targetId", "queryId"), params.requiredKmerMatches)
     Align.runPartitioned(spark, pf, queries, targets, params.evalThr,
       params.xdrop, params.mode.gaps, params.mode.alignMatrix,
       params.mode.gumbel, params.k)
